@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from kinesis_log_streamer_spark.functions.vector import cosine_sim, dot, l2_norm
+from kinesis_log_streamer_spark.session import memo
 
 
 def cosine_topk(
@@ -83,31 +84,21 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
 # 64×(bits+1) local relation was re-built (Python→JVM conversion +
 # analysis) on every lsh_sig_bits call, a fixed ~100 ms driver-side
 # term per s03/s04/s05/s17 sample (VERDICT r9 #2: per-call plan
-# construction dominated the s-family's driver-visible cost).  Keyed
-# by applicationId so a new session rebuilds against its own JVM.
-_PLANES_MEMO: dict = {}
-
-
-def clear_planes_memo() -> None:
-    """Drop memoized plane matrices (bench per-pass reset)."""
-    _PLANES_MEMO.clear()
-
-
+# construction dominated the s-family's driver-visible cost).  Held in
+# the per-application session memo, so a new session rebuilds against
+# its own JVM.
 def _planes_df(spark, dim: int, bits: int, seed: int):
-    key = (spark.sparkContext.applicationId, dim, bits, seed)
-    hit = _PLANES_MEMO.get(key)
-    if hit is not None:
-        return hit
-    planes = _hyperplanes(dim, bits, seed)  # bits × dim
-    plane_rows = [
-        (pos, *[float(planes[i][pos]) for i in range(bits)])
-        for pos in range(dim)
-    ]
-    df = spark.createDataFrame(
-        plane_rows, ["pos", *[f"w{i}" for i in range(bits)]]
-    )
-    _PLANES_MEMO[key] = df
-    return df
+    def build():
+        planes = _hyperplanes(dim, bits, seed)  # bits × dim
+        plane_rows = [
+            (pos, *[float(planes[i][pos]) for i in range(bits)])
+            for pos in range(dim)
+        ]
+        return spark.createDataFrame(
+            plane_rows, ["pos", *[f"w{i}" for i in range(bits)]]
+        )
+
+    return memo(spark, "planes", dim, bits, seed, build=build)
 
 
 def lsh_sig_bits(

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, plus the
+per-application memo of driver-side artifacts.
 
 Local testing runs ``local[$SPARK_GRAFT_CPUS]``; the same settings are
 what we would ship on a 1000-executor cluster (AQE on, skew-join
@@ -9,8 +10,43 @@ engines, Arrow enabled for the Pandas-UDF slow path).
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+
+# Driver-side artifacts built once per Spark application and reused by
+# every later call: loaded table plans, LSH plane matrices, checkpointed
+# index frames, collected truth tables, staged fixture directories.
+# Keyed (applicationId, kind, *key) so a new session rebuilds against
+# its own JVM.  ``clear_memo()`` drops all of them at once (bench.py
+# calls it between suite passes).
+_STORE: dict = {}
+
+
+def memo(
+    spark: SparkSession,
+    kind: str,
+    *key: Any,
+    build: Callable[[], Any],
+    valid: Callable[[Any], bool] | None = None,
+) -> Any:
+    """Return the artifact stored under ``(applicationId, kind, *key)``,
+    calling ``build()`` (which must not return None) on a miss.  A hit
+    that ``valid`` rejects is dropped and rebuilt.  Unlocked: racing
+    misses each build, and the last one stored wins."""
+    k = (spark.sparkContext.applicationId, kind, *key)
+    hit = _STORE.get(k)
+    if hit is not None:
+        if valid is None or valid(hit):
+            return hit
+        _STORE.pop(k, None)
+    hit = _STORE[k] = build()
+    return hit
+
+
+def clear_memo() -> None:
+    """Drop every memoized artifact of every application."""
+    _STORE.clear()
 
 
 def get_spark(

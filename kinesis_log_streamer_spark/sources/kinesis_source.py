@@ -726,9 +726,9 @@ class ThrottlingDirKinesisClient(DirKinesisClient):
     """:class:`DirKinesisClient` that deterministically REJECTS records
     — the partial-failure shape of a throttled ``PutRecords`` call
     (``FailedRecordCount > 0`` with per-record ``ErrorCode``, the
-    branch at basestreamer.go:76-83).  A record whose JSON payload
-    carries ``event_id % reject_mod == 0`` fails; everything else is
-    durably routed to the shard files.  Deterministic by construction,
+    branch at basestreamer.go:76-83).  A record whose JSON object
+    carries an integer ``event_id % reject_mod == 0`` fails; everything
+    else is durably routed to the shard files.  Deterministic by construction,
     so an at-most-once pipeline's drop accounting is exactly
     predictable — which is what lets k04 put the reference's
     log-and-drop semantics under an SQL oracle."""
@@ -750,10 +750,11 @@ class ThrottlingDirKinesisClient(DirKinesisClient):
                 else str(data)
             )
             try:
-                eid = json.loads(text).get("event_id")
+                payload = json.loads(text)
             except ValueError:
-                eid = None
-            if eid is not None and eid % self._reject_mod == 0:
+                payload = None
+            eid = payload.get("event_id") if isinstance(payload, dict) else None
+            if isinstance(eid, int) and eid % self._reject_mod == 0:
                 results.append(
                     {
                         "ErrorCode": "ProvisionedThroughputExceededException",

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kinesis_log_streamer_spark.session import memo
+
 TABLES = (
     "region",
     "nation",
@@ -32,25 +34,16 @@ TABLES = (
 BROADCAST_SAFE = ("region", "nation")
 
 
-# Per-process memo of loaded tables, keyed (session, dir, table).
-# Resolving a parquet relation costs ~90 ms of single-threaded driver
-# time (footer read + schema merge + the NTZ sweep below) on EVERY
-# call, and the registry's 310 queries each load 1-3 tables — across a
+# Loaded tables are memoized per (application, path) in the session
+# memo.  Resolving a parquet relation costs ~90 ms of single-threaded
+# driver time (footer read + schema merge + the NTZ sweep below) on
+# EVERY call, and each registry query loads 1-3 tables — across a
 # bench pass that fixed cost was the single largest per-sample term
 # for the small-plan families (VERDICT r9 #2: the s-family's driver-
 # visible cost was dominated by per-call plan construction, not
 # execution).  DataFrames are immutable plans over immutable driver-
-# generated fixtures, so reuse is safe; ``clear_table_memo()`` exists
-# for callers that rewrite a path mid-process (none in-repo do) and
-# for the bench's per-pass warm-state reset.
-_TABLE_MEMO: dict = {}
-
-
-def clear_table_memo() -> None:
-    """Drop all memoized table DataFrames (bench per-pass reset)."""
-    _TABLE_MEMO.clear()
-
-
+# generated fixtures, so reuse is safe; ``session.clear_memo()`` drops
+# them (bench.py's per-pass reset).
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table from ``sf_dir`` (memoized per session).
 
@@ -60,10 +53,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TimestampType ``ts`` column for every consumer.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, os.path.realpath(path))
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
+    return memo(
+        spark, "table", os.path.realpath(path),
+        build=lambda: _read_table(spark, path, name),
+    )
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     # Pin the session timezone so timestamp results are oracle-comparable
     # even when the caller's session (e.g. the driver's) didn't set it.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -81,11 +77,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
             )
-        df = _ntz_to_ltz(df)
-    else:
-        df = _ntz_to_ltz(spark.read.parquet(path))
-    _TABLE_MEMO[key] = df
-    return df
+        return _ntz_to_ltz(df)
+    return _ntz_to_ltz(spark.read.parquet(path))
 
 
 def _ntz_to_ltz(df: DataFrame) -> DataFrame:

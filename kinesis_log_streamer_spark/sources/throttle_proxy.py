@@ -115,12 +115,14 @@ class ThrottlingKinesisProxy:
             )
 
     def _reject(self, record: dict) -> bool:
+        # Only an object with an integer ``event_id`` can be throttled;
+        # line-mode scalars, arrays and odd ids pass through untouched.
         try:
             payload = json.loads(base64.b64decode(record["Data"]))
-            eid = payload.get("event_id")
         except (ValueError, KeyError):
             return False
-        return eid is not None and eid % self._reject_mod == 0
+        eid = payload.get("event_id") if isinstance(payload, dict) else None
+        return isinstance(eid, int) and eid % self._reject_mod == 0
 
     def _handle(self, h: BaseHTTPRequestHandler) -> None:
         length = int(h.headers.get("Content-Length", "0"))

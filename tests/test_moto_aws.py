@@ -506,3 +506,43 @@ class TestWireLevelPartialFailure:
             assert [r["Data"] for r in recs] == [b"via-moto"]
         finally:
             proxy.stop()
+
+    def test_non_object_or_non_int_id_payloads_forwarded(
+        self, moto_url, kinesis
+    ):
+        # reject_mod=1 would throttle ANY integer event_id, so only the
+        # type guard keeps these three records (a line-mode scalar, an
+        # array, a string id) out of the rejection rule.
+        stream = _make_stream(kinesis, 1)
+        proxy, proxy_url = self._proxy(moto_url, reject_mod=1)
+        try:
+            through = boto3.client(
+                "kinesis",
+                region_name=REGION,
+                endpoint_url=proxy_url,
+                aws_access_key_id=CREDS["access_key"],
+                aws_secret_access_key=CREDS["secret_key"],
+            )
+            odd = [b"42", b"[1]", b'{"event_id":"x"}']
+            resp = through.put_records(
+                StreamName=stream,
+                Records=[
+                    {"Data": d, "PartitionKey": "p"}
+                    for d in [*odd, b'{"event_id":7}']
+                ],
+            )
+            assert resp["FailedRecordCount"] == 1
+            assert [
+                r.get("ErrorCode") for r in resp["Records"]
+            ] == [None, None, None, "ProvisionedThroughputExceededException"]
+            assert proxy.records_rejected == 1
+        finally:
+            proxy.stop()
+
+        it = kinesis.get_shard_iterator(
+            StreamName=stream,
+            ShardId="shardId-000000000000",
+            ShardIteratorType="TRIM_HORIZON",
+        )["ShardIterator"]
+        recs = kinesis.get_records(ShardIterator=it)["Records"]
+        assert [r["Data"] for r in recs] == odd

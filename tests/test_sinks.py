@@ -87,6 +87,28 @@ class TestInterchangeFormats:
         assert sorted(r.value for r in back.collect()) == ["l1", "l2"]
 
 
+class TestThrottlingDirClientPayloadTypes:
+    def test_only_object_with_int_event_id_is_throttled(self, tmp_path):
+        """reject_mod=1 throttles every integer event_id; a line-mode
+        scalar, an array and a string id are accepted, not raised on."""
+        from kinesis_log_streamer_spark.sources.kinesis_source import (
+            ThrottlingDirKinesisClient,
+        )
+
+        client = ThrottlingDirKinesisClient(
+            str(tmp_path / "shards"), num_shards=1, reject_mod=1
+        )
+        data = [b"42", b"[1]", b'{"event_id":"x"}', b'{"event_id":7}']
+        resp = client.put_records(
+            StreamName="t",
+            Records=[{"Data": d, "PartitionKey": "p"} for d in data],
+        )
+        assert resp["FailedRecordCount"] == 1
+        assert [r.get("ErrorCode") for r in resp["Records"]] == [
+            None, None, None, "ProvisionedThroughputExceededException",
+        ]
+
+
 class TestDirShardAppendAtomicity:
     def test_concurrent_put_records_never_tear_lines(self, tmp_path):
         """ADVICE r04 (medium): two writer tasks appending to the SAME
