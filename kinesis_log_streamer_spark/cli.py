@@ -12,8 +12,12 @@ Same flags, same validation, same exit codes:
 * exactly one positional stream name (main.go:124-136)
 * usage errors → exit 2 with usage on stderr (main.go:22-55)
 
-Data path: stdin → line/JSON records → transform/enrich → partition-key
-stamp → Kinesis sink (or ``--dry-run`` → records to stdout).
+Data path (one, always streaming — :func:`run_streaming`): stdin's
+bytes in 64 KiB chunks → landing-dir spool of complete records →
+``readStream`` micro-batches → transform/enrich → partition-key stamp
+(the driver's host identity, linestreamer.go:102) → Kinesis sink (or
+``--dry-run`` → records to stdout).  ``--streaming`` is accepted and
+ignored.
 """
 
 from __future__ import annotations
@@ -23,6 +27,12 @@ import sys
 from collections.abc import Sequence
 
 from kinesis_log_streamer_spark.hostid import get_host_id
+
+# The micro-batch trigger is the flush-on-idle cadence
+# (basestreamer.go:42-46); the per-trigger file cap is the reference's
+# bounded cap-5 channel (linestreamer.go:37).
+TRIGGER_MS = 500
+MAX_FILES_PER_TRIGGER = 5
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -59,44 +69,8 @@ def build_parser() -> argparse.ArgumentParser:
             "(basestreamer.go:64-87)"
         ),
     )
-    p.add_argument(
-        "--streaming",
-        action="store_true",
-        help=(
-            "tail stdin continuously instead of buffering it: 64 KiB "
-            "chunked reads spooled to a landing dir drive a Structured "
-            "Streaming query with a processingTime trigger — the "
-            "reference's actual loop (bounded reads, flush-on-idle, "
-            "EOF drain; linestreamer.go:34-57, basestreamer.go:27-46)"
-        ),
-    )
-    p.add_argument(
-        "--trigger",
-        default="500 milliseconds",
-        help="processingTime trigger interval for --streaming "
-        "(the flush-on-idle cadence)",
-    )
-    p.add_argument(
-        "--host-identity",
-        choices=["driver", "per-executor"],
-        default="driver",
-        help=(
-            "where E1's host-identity cascade runs: 'driver' stamps one "
-            "key for the whole job (deterministic, the reference's "
-            "single-host deployment); 'per-executor' runs the cascade "
-            "inside each executor so every producing host keeps its own "
-            "partition key on a real cluster (linestreamer.go:102)"
-        ),
-    )
-    p.add_argument(
-        "--max-files-per-trigger",
-        type=int,
-        default=5,
-        metavar="N",
-        help="per-micro-batch intake cap for --streaming — the "
-        "reference's bounded (cap-5) channel backpressure "
-        "(linestreamer.go:37)",
-    )
+    # Accepted for compatibility: stdin always streams through the spool.
+    p.add_argument("--streaming", action="store_true", help=argparse.SUPPRESS)
     p.add_argument("stream_name", nargs="*")
     return p
 
@@ -124,16 +98,19 @@ def resolve_output_format(fmt: str, output_format: str) -> str:
 
 
 def run_streaming(args, entries, output_format, stream) -> int:
-    """The CLI's streaming data path (C1 parity with the reference's
-    never-EOF pipe deployment): chunked stdin → landing-dir spool →
-    ``readStream`` → line/JSON pipeline → sink, with bounded
-    per-trigger intake and idle-stop on EOF.
+    """The CLI's data path: chunked ``stream`` (stdin's bytes) →
+    landing-dir spool → ``readStream`` → line/JSON pipeline → sink,
+    with bounded per-trigger intake and idle-stop on EOF (C1 parity
+    with the reference's never-EOF pipe deployment).
 
     The full input is NEVER held in one string: the spooler carries at
     most one 64 KiB chunk plus one partial record
     (`streaming/stdin_spool.py`), and the query pulls at most
-    ``--max-files-per-trigger`` landed files per micro-batch."""
+    ``MAX_FILES_PER_TRIGGER`` landed files per micro-batch.  The work
+    directory (spool and checkpoint) is removed once the query has
+    stopped, success or not."""
     import os
+    import shutil
     import tempfile
 
     from kinesis_log_streamer_spark.session import get_spark
@@ -145,78 +122,74 @@ def run_streaming(args, entries, output_format, stream) -> int:
     from kinesis_log_streamer_spark.streaming.stdin_spool import (
         StdinSpooler,
         drain_and_stop,
-        parse_trigger_seconds,
     )
 
     spark = get_spark("kinesis-log-streamer-cli")
     work = tempfile.mkdtemp(prefix="klss-spool-")
-    landing = os.path.join(work, "landing")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing, exist_ok=True)
-
-    per_exec = args.host_identity == "per-executor"
-    host_id = None if per_exec else get_host_id(probe_network=not args.dry_run)
-    # cleanSource=delete: processed spool files are removed on later
-    # triggers, so a never-EOF pipe (the Apache CustomLog deployment)
-    # keeps both the landing dir and the source's file listing
-    # bounded instead of growing for the life of the process.
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", args.max_files_per_trigger)
-        .option("cleanSource", "delete")
-        .load(landing)
-    )
-    if args.format == "json":
-        # landing files are JSONL: one complete JSON value per line
-        records = build_json_pipeline(
-            raw, entries, host_id, per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
-    else:
-        records = build_line_pipeline(
-            raw, output_format, args.output_key, entries, host_id,
-            per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
-
-    if args.dry_run:
-
-        class _StdoutSink:
-            def write_batch(self, df, epoch_id):
-                for row in df.collect():
-                    print(f"{row['partitionKey']}\t{row['data']}")
-
-        sink = _StdoutSink()
-    else:
-        from kinesis_log_streamer_spark.streaming.kinesis_sink import (
-            KinesisSink,
-        )
-
-        sink = KinesisSink(
-            args.stream_name[0],
-            region=args.region,
-            profile=args.profile,
-            delivery=args.delivery,
-        )
-
-    spooler = StdinSpooler(stream, landing, fmt=args.format)
-    query = run_stream(
-        records,
-        sink,
-        ckpt,
-        available_now=False,
-        processing_time=args.trigger,
-    )
     try:
-        spooler.start_thread()
-        drain_and_stop(
-            query,
-            spooler,
-            trigger_interval_s=parse_trigger_seconds(args.trigger),
+        landing = os.path.join(work, "landing")
+        os.makedirs(landing)
+        host_id = get_host_id(probe_network=not args.dry_run)
+        # cleanSource=delete: processed spool files are removed on later
+        # triggers, so a never-EOF pipe (the Apache CustomLog deployment)
+        # keeps both the landing dir and the source's file listing
+        # bounded instead of growing for the life of the process.
+        raw = (
+            spark.readStream.format("text")
+            .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
+            .option("cleanSource", "delete")
+            .load(landing)
         )
+        if args.format == "json":
+            # landing files are JSONL: one complete JSON value per line
+            records = build_json_pipeline(raw, entries, host_id)
+        else:
+            records = build_line_pipeline(
+                raw, output_format, args.output_key, entries, host_id
+            )
+
+        if args.dry_run:
+
+            class _StdoutSink:
+                def write_batch(self, df, epoch_id):
+                    for row in df.collect():
+                        print(f"{row['partitionKey']}\t{row['data']}")
+
+            sink = _StdoutSink()
+        else:
+            from kinesis_log_streamer_spark.streaming.kinesis_sink import (
+                KinesisSink,
+            )
+
+            sink = KinesisSink(
+                args.stream_name[0],
+                region=args.region,
+                profile=args.profile,
+                delivery=args.delivery,
+            )
+
+        spooler = StdinSpooler(stream, landing, fmt=args.format)
+        query = run_stream(
+            records,
+            sink,
+            os.path.join(work, "ckpt"),
+            available_now=False,
+            processing_time=f"{TRIGGER_MS} milliseconds",
+        )
+        try:
+            spooler.start_thread()
+            drain_and_stop(
+                query, spooler, trigger_interval_s=TRIGGER_MS / 1000
+            )
+        finally:
+            if query.isActive:
+                query.stop()
     finally:
-        if query.isActive:
-            query.stop()
+        # The path is random per run, so nothing can resume from this
+        # checkpoint; and cleanSource deletes a landed file only on a
+        # LATER trigger, so the last batch's records would otherwise
+        # outlive the run on disk.
+        shutil.rmtree(work, ignore_errors=True)
     if spooler.error is not None:
         print(f"stdin spool failed: {spooler.error}", file=sys.stderr)
         return 1
@@ -231,55 +204,7 @@ def main(argv: Sequence[str] | None = None) -> int:
         return 2
     entries = parse_entries(args.add_entry, parser)
     output_format = resolve_output_format(args.format, args.output_format)
-
-    from kinesis_log_streamer_spark.session import get_spark
-    from kinesis_log_streamer_spark.sources.json_source import (
-        split_concatenated_json,
-    )
-    from kinesis_log_streamer_spark.sources.lines import lines_from_stdin
-    from kinesis_log_streamer_spark.streaming.pipeline import (
-        build_json_pipeline,
-        build_line_pipeline,
-    )
-
-    if args.streaming:
-        return run_streaming(args, entries, output_format, sys.stdin.buffer)
-
-    spark = get_spark("kinesis-log-streamer-cli")
-    stdin_data = sys.stdin.read()
-    per_exec = args.host_identity == "per-executor"
-    host_id = None if per_exec else get_host_id(probe_network=not args.dry_run)
-
-    if args.format == "json":
-        values = split_concatenated_json(stdin_data, strict=True)
-        df = spark.createDataFrame([(v,) for v in values], "value string")
-        records = build_json_pipeline(
-            df, entries, host_id, per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
-    else:
-        df = lines_from_stdin(spark, stdin_data)
-        records = build_line_pipeline(
-            df, output_format, args.output_key, entries, host_id,
-            per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
-
-    if args.dry_run:
-        for row in records.collect():
-            print(f"{row['partitionKey']}\t{row['data']}")
-        return 0
-
-    from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
-
-    sink = KinesisSink(
-        args.stream_name[0],
-        region=args.region,
-        profile=args.profile,
-        delivery=args.delivery,
-    )
-    sink.write_batch(records, epoch_id=0)
-    return 0
+    return run_streaming(args, entries, output_format, sys.stdin.buffer)
 
 
 if __name__ == "__main__":

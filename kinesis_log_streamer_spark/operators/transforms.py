@@ -128,32 +128,3 @@ def to_sink_records(df: DataFrame, partition_key: str) -> DataFrame:
     out = df if "data" in df.columns else df.select(F.col(df.columns[0]).alias("data"))
     return stamp_partition_key(out.select("data"), partition_key)
 
-
-def stamp_partition_key_per_executor(
-    df: DataFrame, probe_network: bool = False
-) -> DataFrame:
-    """E1 on a CLUSTER: each EXECUTOR stamps its own host identity.
-
-    The reference runs once per producing host, so every record of one
-    host shares a partition key (linestreamer.go:102); on a Spark
-    cluster the driver-side ``lit()`` default (deterministic,
-    test-friendly — SURVEY §7 risk 4) collapses that to one key for the
-    whole job.  This variant reproduces per-producing-host semantics:
-    the identity cascade runs inside each executor's Python worker
-    (memoized — ``hostid.get_host_id`` is ``lru_cache``d per process)
-    and is stamped Arrow-batch-wise via ``mapInPandas``, so the probe
-    cost is once per worker, not per row.
-    """
-    from kinesis_log_streamer_spark.hostid import get_host_id
-
-    out = df if "data" in df.columns else df.select(F.col(df.columns[0]).alias("data"))
-    out = out.select("data")
-
-    def stamp(batches):
-        hid = get_host_id(probe_network=probe_network)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["partitionKey"] = hid
-            yield pdf
-
-    return out.mapInPandas(stamp, schema="data string, partitionKey string")

@@ -12916,8 +12916,8 @@ def p11_join_size_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def i08_live_spool_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CLI STREAMING mode's LIVE concurrency under the oracle
-    gate (cli.py:147-225): the spooler thread lands 64 KiB chunks
+    """The CLI data path's LIVE concurrency under the oracle
+    gate (``cli.main``): the spooler thread lands 64 KiB chunks
     (the reference's read size, linestreamer.go:34) WHILE a
     ``processingTime`` micro-batch query tails the landing directory
     with ``maxFilesPerTrigger`` backpressure (the cap-5 channel,

@@ -10,7 +10,7 @@ true concatenated JSON needs a pre-splitter: we read whole files
 (``wholetext``) and split each into top-level values with an
 incremental ``json.JSONDecoder.raw_decode`` loop inside
 ``mapInPandas`` — Arrow-batched, one Python pass per file, not per
-record. JSON-lines input short-circuits to the native text source.
+record.
 
 Semantics reproduced:
 * one record per top-level value, any separation     (jsonstreamer.go:40-46)
@@ -27,7 +27,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ConcatenatedJsonError(ValueError):
@@ -85,14 +84,3 @@ def read_concatenated_json(
 
     return whole.mapInPandas(split_batches, schema="value string")
 
-
-def read_json_lines(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """JSON-lines fast path: native splittable source, full pushdown.
-
-    With ``schema`` → typed columns; without → keep the raw line for
-    passthrough fidelity (the reference never interprets values)."""
-    if schema:
-        return spark.read.schema(schema).json(path)
-    return spark.read.text(path).filter(F.length("value") > 0)

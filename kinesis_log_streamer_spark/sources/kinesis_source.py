@@ -95,6 +95,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from kinesis_log_streamer_spark.sources.throttle_proxy import throttled
+
 SCHEMA = "data string, partitionKey string, shardId string, sequenceNumber long"
 AWS_SCHEMA = "data string, partitionKey string, shardId string, sequenceNumber string"
 
@@ -488,21 +490,13 @@ class KinesisDataSourceWriter(DataSourceWriter):
 
         from kinesis_log_streamer_spark.streaming.kinesis_sink import (
             chunk_records,
+            record_pairs,
         )
 
         staging = os.path.join(self._dir, f".staging-{uuid.uuid4().hex}")
         client = DirKinesisClient(staging, self._num_shards)
-        pairs = (
-            (
-                row.data
-                if isinstance(row.data, (bytes, bytearray))
-                else str(row.data).encode(),
-                row.partitionKey,
-            )
-            for row in iterator
-        )
         n = 0
-        for batch in chunk_records(pairs):
+        for batch in chunk_records(record_pairs(iterator)):
             client.put_records(
                 StreamName=self._stream,
                 Records=[
@@ -726,8 +720,8 @@ class ThrottlingDirKinesisClient(DirKinesisClient):
     """:class:`DirKinesisClient` that deterministically REJECTS records
     — the partial-failure shape of a throttled ``PutRecords`` call
     (``FailedRecordCount > 0`` with per-record ``ErrorCode``, the
-    branch at basestreamer.go:76-83).  A record whose JSON object
-    carries an integer ``event_id % reject_mod == 0`` fails; everything
+    branch at basestreamer.go:76-83).  A record the shared
+    :func:`~.throttle_proxy.throttled` rule picks fails; everything
     else is durably routed to the shard files.  Deterministic by construction,
     so an at-most-once pipeline's drop accounting is exactly
     predictable — which is what lets k04 put the reference's
@@ -743,18 +737,7 @@ class ThrottlingDirKinesisClient(DirKinesisClient):
         results: list[dict] = []
         accepted: list[dict] = []
         for rec in Records:
-            data = rec["Data"]
-            text = (
-                data.decode("utf-8")
-                if isinstance(data, (bytes, bytearray))
-                else str(data)
-            )
-            try:
-                payload = json.loads(text)
-            except ValueError:
-                payload = None
-            eid = payload.get("event_id") if isinstance(payload, dict) else None
-            if isinstance(eid, int) and eid % self._reject_mod == 0:
+            if throttled(rec["Data"], self._reject_mod):
                 results.append(
                     {
                         "ErrorCode": "ProvisionedThroughputExceededException",

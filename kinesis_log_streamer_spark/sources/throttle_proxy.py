@@ -9,10 +9,10 @@ per-record ``ErrorCode``/``ErrorMessage``, basestreamer.go:76-83)
 cannot be exercised against moto alone.  This proxy closes that gap AT
 THE WIRE: it intercepts ``Kinesis_20131202.PutRecords`` requests,
 withholds the records a deterministic rule rejects (JSON payloads with
-``event_id % reject_mod == 0`` — the same rule as
-:class:`~.kinesis_source.ThrottlingDirKinesisClient`, so the k04/k09
-oracles state the identical survivor set), forwards the remainder
-upstream, and splices ``ProvisionedThroughputExceededException``
+``event_id % reject_mod == 0`` — :func:`throttled`, the one rule
+that :class:`~.kinesis_source.ThrottlingDirKinesisClient` also calls,
+so the k04/k09 oracles state the identical survivor set), forwards the
+remainder upstream, and splices ``ProvisionedThroughputExceededException``
 entries into the response at the withheld positions.  The producer
 therefore sees a REAL throttled PutRecords response — serialized,
 HTTP-transported, and parsed by botocore — while the withheld records
@@ -46,6 +46,24 @@ _THROTTLE_ENTRY = {
         "Rate exceeded for shard (simulated wire-level throttle)"
     ),
 }
+
+
+def throttled(data: bytes | str, reject_mod: int) -> bool:
+    """The deterministic throttle rule shared by this proxy and
+    :class:`~.kinesis_source.ThrottlingDirKinesisClient`: a record is
+    rejected iff its payload is a JSON object whose ``event_id`` is an
+    integer (not a JSON boolean) with ``event_id % reject_mod == 0``.
+    Line-mode scalars, arrays, undecodable bytes and other ids pass."""
+    try:
+        payload = json.loads(data)
+    except (TypeError, ValueError):
+        return False
+    eid = payload.get("event_id") if isinstance(payload, dict) else None
+    return (
+        isinstance(eid, int)
+        and not isinstance(eid, bool)
+        and eid % reject_mod == 0
+    )
 
 
 class ThrottlingKinesisProxy:
@@ -115,14 +133,11 @@ class ThrottlingKinesisProxy:
             )
 
     def _reject(self, record: dict) -> bool:
-        # Only an object with an integer ``event_id`` can be throttled;
-        # line-mode scalars, arrays and odd ids pass through untouched.
         try:
-            payload = json.loads(base64.b64decode(record["Data"]))
+            data = base64.b64decode(record["Data"])
         except (ValueError, KeyError):
             return False
-        eid = payload.get("event_id") if isinstance(payload, dict) else None
-        return isinstance(eid, int) and eid % self._reject_mod == 0
+        return throttled(data, self._reject_mod)
 
     def _handle(self, h: BaseHTTPRequestHandler) -> None:
         length = int(h.headers.get("Content-Length", "0"))

@@ -38,6 +38,16 @@ MAX_BYTES_PER_CALL = 5 * 1024 * 1024  # 5 MiB API limit
 MAX_BYTES_PER_RECORD = 1024 * 1024  # 1 MiB per record (data+key)
 
 
+def record_pairs(rows: Iterable) -> Iterator[tuple[bytes, str]]:
+    """Sink rows (``data``, ``partitionKey``) → ``(bytes, key)`` pairs,
+    the PutRecordsRequestEntry shape (linestreamer.go:100-103)."""
+    for r in rows:
+        data = r["data"]
+        if not isinstance(data, (bytes, bytearray)):
+            data = str(data).encode()
+        yield data, r["partitionKey"]
+
+
 def chunk_records(
     rows: Iterable[tuple[bytes, str]],
     max_records: int = MAX_RECORDS_PER_CALL,
@@ -242,14 +252,7 @@ class KinesisSink:
 
         def write_partition(rows) -> None:
             client = factory()
-            pairs = (
-                (
-                    r["data"] if isinstance(r["data"], (bytes, bytearray)) else str(r["data"]).encode(),
-                    r["partitionKey"],
-                )
-                for r in rows
-            )
-            for batch in chunk_records(pairs):
+            for batch in chunk_records(record_pairs(rows)):
                 if at_most_once:
                     accepted.add(
                         put_records_at_most_once(
@@ -285,14 +288,9 @@ class CollectingSink:
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
         rows = df.select("data", "partitionKey").collect()
-        pairs = [
-            (
-                r["data"] if isinstance(r["data"], (bytes, bytearray)) else str(r["data"]).encode(),
-                r["partitionKey"],
-            )
-            for r in rows
-        ]
-        self.batches.extend(chunk_records(pairs, max_records=self.max_records))
+        self.batches.extend(
+            chunk_records(record_pairs(rows), max_records=self.max_records)
+        )
 
     @property
     def records(self) -> list[tuple[bytes, str]]:

@@ -27,7 +27,6 @@ from kinesis_log_streamer_spark.operators.transforms import (
     enrich_json_objects,
     filter_empty_lines,
     line_passthrough,
-    stamp_partition_key_per_executor,
     strip_cr,
     to_sink_records,
     wrap_line_as_json,
@@ -40,8 +39,6 @@ def build_line_pipeline(
     output_key: str = "LogEntry",
     entries: Mapping[str, str] | None = None,
     host_id: str | None = None,
-    per_executor_identity: bool = False,
-    probe_network: bool = False,
 ) -> DataFrame:
     """Entry points 1 & 3: line records → sink records.
 
@@ -49,23 +46,12 @@ def build_line_pipeline(
     ``'json'`` → T2 wrap + T4 enrichment.
     Works identically on batch and streaming DataFrames (same logical
     plan; the micro-batch engine re-plans per trigger).
-
-    ``per_executor_identity=True`` stamps E1 inside each executor
-    (closer to the reference's one-key-per-producing-host semantics on
-    a real cluster, SURVEY §2.1 E1) instead of the driver-side
-    constant; ``host_id`` is ignored in that mode.  ``probe_network``
-    reaches the executor-side cascade too, so driver and per-executor
-    modes resolve identity through the SAME levels on a real run
-    (ADVICE r06: per-executor used to pin probe_network=False while
-    driver mode probed, letting the two modes disagree on one host).
     """
     clean = filter_empty_lines(strip_cr(lines))
     if output_format == "json":
         projected = wrap_line_as_json(clean, "value", output_key, entries)
     else:
         projected = line_passthrough(clean)
-    if per_executor_identity:
-        return stamp_partition_key_per_executor(projected, probe_network)
     return to_sink_records(projected, host_id or get_host_id())
 
 
@@ -73,19 +59,13 @@ def build_json_pipeline(
     values: DataFrame,
     entries: Mapping[str, str] | None = None,
     host_id: str | None = None,
-    per_executor_identity: bool = False,
-    probe_network: bool = False,
 ) -> DataFrame:
     """Entry point 2: JSON value records → enriched sink records
-    (F2 null skip + T4 objects-only enrichment + T3 re-serialize).
-    ``per_executor_identity`` / ``probe_network`` as in
-    :func:`build_line_pipeline`."""
+    (F2 null skip + T4 objects-only enrichment + T3 re-serialize)."""
     nonnull = values.filter(values["value"].isNotNull()).filter(
         values["value"] != "null"
     )
     projected = enrich_json_objects(nonnull, "value", entries)
-    if per_executor_identity:
-        return stamp_partition_key_per_executor(projected, probe_network)
     return to_sink_records(projected, host_id or get_host_id())
 
 
@@ -130,19 +110,6 @@ def windowed_event_counts(
         events.withWatermark("ts", watermark)
         .groupBy(w, "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-    )
-
-
-def sessionized_event_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming session windows (gap-close semantics) per user."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
 

@@ -1,14 +1,10 @@
-"""Chunked stdin → landing-dir spool for the CLI's STREAMING mode.
+"""Chunked stdin → landing-dir spool: the CLI's only input path.
 
 The reference never buffers its input: it reads stdin in 64 KiB
 chunks (linestreamer.go:34), carries the trailing partial record
 across chunk boundaries (linestreamer.go:49-57), and ships complete
 records downstream through a bounded (cap-5) channel
 (linestreamer.go:37) with flush-on-idle (basestreamer.go:42-46).
-The CLI's original batch path (`sys.stdin.read()`) held the whole
-input in one driver string — a semantics delta as much as a memory
-one, because an Apache log pipe never EOFs and flush-on-idle could
-never fire.
 
 This module is the Spark-native equivalent of that loop: a spooler
 thread reads stdin chunk-by-chunk, extracts COMPLETE records (lines,
@@ -258,24 +254,3 @@ def drain_and_stop(
     if exc is not None:
         raise exc
 
-
-def parse_trigger_seconds(trigger: str) -> float:
-    """Best-effort parse of a Spark processingTime string ('500
-    milliseconds', '2 seconds', '1 minute') into seconds, for sizing
-    the idle-drain window; unknown shapes fall back to 1s."""
-    parts = trigger.strip().lower().split()
-    try:
-        value = float(parts[0])
-        unit = parts[1] if len(parts) > 1 else "seconds"
-    except (ValueError, IndexError):
-        return 1.0
-    for prefix, scale in (
-        ("milli", 0.001),
-        ("micro", 0.000001),
-        ("second", 1.0),
-        ("minute", 60.0),
-        ("hour", 3600.0),
-    ):
-        if unit.startswith(prefix):
-            return value * scale
-    return 1.0

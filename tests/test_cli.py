@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import io
+import tempfile
+import types
 
 import pytest
 
@@ -60,12 +62,33 @@ class TestParsing:
         assert cli.parse_entries(["k=a=b"], parser) == {"k": "a=b"}
 
 
+def _stdin(data: bytes) -> io.TextIOWrapper:
+    """A bytes-backed sys.stdin stand-in (the CLI reads ``.buffer``)."""
+    return io.TextIOWrapper(io.BytesIO(data))
+
+
+class _ChunkedStdin:
+    """sys.stdin stand-in whose text ``read()`` refuses (the input must
+    never be slurped) and whose ``.buffer.read1`` yields byte chunks."""
+
+    def __init__(self, chunks: list[bytes]) -> None:
+        self.buffer = types.SimpleNamespace(
+            read1=lambda n: chunks.pop(0) if chunks else b""
+        )
+
+    def read(self, *args):
+        raise AssertionError("sys.stdin.read() slurped the whole input")
+
+
+def _records(out: str) -> list[str]:
+    return [line.split("\t", 1)[1] for line in out.strip().splitlines()]
+
+
 class TestDryRunEndToEnd:
     def test_line_json_pipeline(self, spark, monkeypatch, capsys):
-        # entry point 3: error-log shape (httpd.conf:182)
-        monkeypatch.setattr(
-            "sys.stdin", io.StringIO("warn: x\n\nerror: y\n")
-        )
+        # entry point 3: error-log shape (httpd.conf:182); S2 CRLF
+        # strip, F1 empty-line drop, unterminated last line kept
+        monkeypatch.setattr("sys.stdin", _stdin(b"warn: x\r\n\nerror: y"))
         rc = cli.main(
             ["-F", "json", "-I", "LogFile=HTTPErrorLog", "--dry-run", "Test"]
         )
@@ -74,11 +97,13 @@ class TestDryRunEndToEnd:
         assert len(out) == 2
         assert all("\t" in line for line in out)
         assert '"LogFile":"HTTPErrorLog"' in out[0]
+        assert sorted(line.split("\t", 1)[1] for line in out) == [
+            '{"LogEntry":"error: y","LogFile":"HTTPErrorLog"}',
+            '{"LogEntry":"warn: x","LogFile":"HTTPErrorLog"}',
+        ]
 
     def test_json_pipeline(self, spark, monkeypatch, capsys):
-        monkeypatch.setattr(
-            "sys.stdin", io.StringIO('{"a":"1"} null 42')
-        )
+        monkeypatch.setattr("sys.stdin", _stdin(b'{"a":"1"} null 42'))
         rc = cli.main(["-f", "json", "-I", "Tag=T", "--dry-run", "Test"])
         assert rc == 0
         out = capsys.readouterr().out.strip().splitlines()
@@ -86,6 +111,31 @@ class TestDryRunEndToEnd:
         assert len(out) == 2
         assert any('"Tag":"T"' in line for line in out)
         assert any(line.endswith("\t42") for line in out)
+
+
+class TestOneIngestPath:
+    def test_stdin_streams_in_chunks_with_or_without_flag(
+        self, spark, monkeypatch, capsys
+    ):
+        # one record split across two chunks, one CRLF, one empty line
+        for flags in ([], ["--streaming"]):
+            monkeypatch.setattr(
+                "sys.stdin", _ChunkedStdin([b"alp", b"ha\r\n\nbe", b"ta\n"])
+            )
+            assert cli.main([*flags, "--dry-run", "S"]) == 0
+            got = sorted(_records(capsys.readouterr().out))
+            assert got == ["alpha", "beta"], flags
+
+    def test_work_dir_removed_after_run(self, spark, monkeypatch, tmp_path):
+        # the spool holds a copy of the input: it must not outlive the
+        # run, whether the run succeeds or fails
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        monkeypatch.setattr("sys.stdin", _stdin(b"ok\nfine\n"))
+        assert cli.main(["--dry-run", "-F", "json", "S"]) == 0
+        assert list(tmp_path.glob("klss-spool-*")) == []
+        monkeypatch.setattr("sys.stdin", _stdin(b'{"ok": 1} {"unterminated'))
+        assert cli.main(["--dry-run", "-f", "json", "S"]) == 1
+        assert list(tmp_path.glob("klss-spool-*")) == []
 
 
 class TestHostId:

@@ -511,8 +511,9 @@ class TestWireLevelPartialFailure:
         self, moto_url, kinesis
     ):
         # reject_mod=1 would throttle ANY integer event_id, so only the
-        # type guard keeps these three records (a line-mode scalar, an
-        # array, a string id) out of the rejection rule.
+        # type guard keeps these four records (a line-mode scalar, an
+        # array, a string id, a JSON boolean id) out of the rejection
+        # rule.
         stream = _make_stream(kinesis, 1)
         proxy, proxy_url = self._proxy(moto_url, reject_mod=1)
         try:
@@ -523,7 +524,7 @@ class TestWireLevelPartialFailure:
                 aws_access_key_id=CREDS["access_key"],
                 aws_secret_access_key=CREDS["secret_key"],
             )
-            odd = [b"42", b"[1]", b'{"event_id":"x"}']
+            odd = [b"42", b"[1]", b'{"event_id":"x"}', b'{"event_id":false}']
             resp = through.put_records(
                 StreamName=stream,
                 Records=[
@@ -534,7 +535,7 @@ class TestWireLevelPartialFailure:
             assert resp["FailedRecordCount"] == 1
             assert [
                 r.get("ErrorCode") for r in resp["Records"]
-            ] == [None, None, None, "ProvisionedThroughputExceededException"]
+            ] == [None] * len(odd) + ["ProvisionedThroughputExceededException"]
             assert proxy.records_rejected == 1
         finally:
             proxy.stop()

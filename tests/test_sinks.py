@@ -90,7 +90,8 @@ class TestInterchangeFormats:
 class TestThrottlingDirClientPayloadTypes:
     def test_only_object_with_int_event_id_is_throttled(self, tmp_path):
         """reject_mod=1 throttles every integer event_id; a line-mode
-        scalar, an array and a string id are accepted, not raised on."""
+        scalar, an array, a string id and a JSON boolean id are
+        accepted, not raised on."""
         from kinesis_log_streamer_spark.sources.kinesis_source import (
             ThrottlingDirKinesisClient,
         )
@@ -98,14 +99,17 @@ class TestThrottlingDirClientPayloadTypes:
         client = ThrottlingDirKinesisClient(
             str(tmp_path / "shards"), num_shards=1, reject_mod=1
         )
-        data = [b"42", b"[1]", b'{"event_id":"x"}', b'{"event_id":7}']
+        data = [
+            b"42", b"[1]", b'{"event_id":"x"}', b'{"event_id":false}',
+            b'{"event_id":7}',
+        ]
         resp = client.put_records(
             StreamName="t",
             Records=[{"Data": d, "PartitionKey": "p"} for d in data],
         )
         assert resp["FailedRecordCount"] == 1
         assert [r.get("ErrorCode") for r in resp["Records"]] == [
-            None, None, None, "ProvisionedThroughputExceededException",
+            None, None, None, None, "ProvisionedThroughputExceededException",
         ]
 
 

@@ -12,7 +12,7 @@ from kinesis_log_streamer_spark.sources.json_source import (
     read_concatenated_json,
     split_concatenated_json,
 )
-from kinesis_log_streamer_spark.sources.lines import lines_from_stdin, read_lines
+from kinesis_log_streamer_spark.sources.lines import read_lines
 
 
 class TestSplitConcatenatedJson:
@@ -59,10 +59,6 @@ class TestFileSources:
         df = read_concatenated_json(spark, str(p))
         vals = sorted(r.value for r in df.collect())
         assert vals == sorted(['{"a":1}', '{"b":[1,2]}', "7", '"x"'])
-
-    def test_stdin_adapter(self, spark):
-        df = lines_from_stdin(spark, "a\nb\r\n\nc")
-        assert sorted(r.value for r in df.collect()) == ["a", "b", "c"]
 
 
 class TestApacheAccessLogPath:

@@ -22,7 +22,7 @@ from kinesis_log_streamer_spark.streaming.stdin_spool import (
 class ChunkedStream(io.RawIOBase):
     """A byte stream that (a) yields data in caller-script chunk
     sizes and (b) REFUSES unbounded reads — any attempt to slurp the
-    whole input (the old ``sys.stdin.read()`` path) raises."""
+    whole input raises."""
 
     def __init__(self, pieces: list[bytes], max_read: int = 65536):
         self._pieces = list(pieces)
@@ -169,9 +169,9 @@ class TestStreamingEndToEnd:
         assert sorted(batch_rows) == sorted(per_file)
 
     def test_cli_streaming_dry_run(self, spark, capsys, monkeypatch):
-        """`--streaming --dry-run` end-to-end through cli.main's
-        streaming branch (run_streaming): chunked stdin in, records
-        on stdout, zero full-input buffering."""
+        """`--dry-run` end-to-end through the CLI's data path
+        (run_streaming): chunked stdin in, records on stdout, zero
+        full-input buffering."""
         from kinesis_log_streamer_spark import cli
 
         args = cli.build_parser().parse_args(
@@ -186,17 +186,6 @@ class TestStreamingEndToEnd:
             line.split("\t", 1)[1] for line in out.strip().splitlines()
         )
         assert got == ["one", "three", "two"]
-
-
-def test_parse_trigger_seconds():
-    from kinesis_log_streamer_spark.streaming.stdin_spool import (
-        parse_trigger_seconds,
-    )
-
-    assert parse_trigger_seconds("500 milliseconds") == 0.5
-    assert parse_trigger_seconds("2 seconds") == 2.0
-    assert parse_trigger_seconds("1 minute") == 60.0
-    assert parse_trigger_seconds("garbage") == 1.0
 
 
 def test_spooler_prefers_read1_over_blocking_read(tmp_path):
@@ -246,23 +235,14 @@ def test_cli_streaming_json_garbage_exits_1(spark, capsys):
     assert rc == 1
 
 
-@pytest.mark.parametrize("mode", ["driver", "per-executor"])
-def test_cli_streaming_host_identity_modes(spark, capsys, mode):
-    """E1 through `--streaming` in BOTH identity modes (VERDICT r05
-    item 5): every record carries a non-empty partition key, all
-    records of one producing host share one key (linestreamer.go:102
-    — on local[n] every executor IS the same host, so per-executor
-    mode also yields a single stable key), and the per-executor key
-    matches the cascade the executors actually ran."""
+def test_cli_host_identity(spark, capsys):
+    """E1 through the CLI: every record carries a non-empty partition
+    key, and all records share the one key of the process that reads
+    stdin (linestreamer.go:102)."""
     from kinesis_log_streamer_spark import cli
     from kinesis_log_streamer_spark.hostid import get_host_id
 
-    args = cli.build_parser().parse_args(
-        [
-            "--streaming", "--dry-run", "-f", "line",
-            "--host-identity", mode, "Stream",
-        ]
-    )
+    args = cli.build_parser().parse_args(["--dry-run", "-f", "line", "Stream"])
     stream = ChunkedStream([b"alpha\nbe", b"ta\ngamma\n"])
     rc = cli.run_streaming(args, {}, "string", stream)
     assert rc == 0
@@ -273,9 +253,7 @@ def test_cli_streaming_host_identity_modes(spark, capsys, mode):
     assert len(keys) == 1  # one producing host -> one stable key
     key = keys.pop()
     assert key
-    # local-mode executors share the driver's host: both modes resolve
-    # the same identity cascade (uuid tail aside, the cascade levels
-    # above uuid are deterministic per host)
+    # the cascade levels above uuid are deterministic per host
     expected = get_host_id(probe_network=False)
     if not expected.startswith("uuid:"):
         assert key == expected
