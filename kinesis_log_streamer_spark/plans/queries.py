@@ -40,11 +40,12 @@ from __future__ import annotations
 
 import math
 import os
+from collections.abc import Callable
 
 import pandas as pd
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.window import Window as W
 
 from kinesis_log_streamer_spark.operators import dedup as D
@@ -2067,6 +2068,46 @@ def l06_client_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("client", "session_start")
 
 
+def _set_conf(spark: SparkSession, key: str, value: str | None) -> None:
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+def _drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    confs: dict[str, str | None] | None = None,
+) -> StreamingQuery:
+    """Run the un-triggered ``DataStreamWriter`` to completion with
+    ``Trigger.AvailableNow`` (the reference's EOF drain,
+    basestreamer.go:27-33) and return the finished ``StreamingQuery``.
+
+    ``confs`` are session confs held only for the drain (``None``
+    unsets a key); each key gets its prior value back in a ``finally``,
+    and a key that was unset before is unset again.  A query still
+    running after 600 s is stopped and raises ``RuntimeError`` —
+    reading its partial output, or removing its checkpoint under it,
+    would race the running query.  A failed query raises from
+    ``awaitTermination``."""
+    confs = confs or {}
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            _set_conf(spark, key, value)
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(
+                f"availableNow drain {q.name or q.id} timed out (600s)"
+            )
+        return q
+    finally:
+        for key, value in prev.items():
+            _set_conf(spark, key, value)
+
+
 def _drain_stream_to_table(
     agg: DataFrame,
     name: str,
@@ -2074,12 +2115,10 @@ def _drain_stream_to_table(
     n_partitions: int = 8,
     no_data: bool = True,
 ) -> None:
-    """Run a bounded streaming query to completion:
-    ``Trigger.AvailableNow`` (the reference's EOF drain,
-    basestreamer.go:27-33) into a memory sink.  ``complete`` mode for
-    aggregations (every window/session emitted regardless of
-    watermark); ``append`` for stream-stream joins / dedup, which emit
-    rows as they materialize.
+    """Drain a bounded streaming query (:func:`_drain`) into a memory
+    sink.  ``complete`` mode for aggregations (every window/session
+    emitted regardless of watermark); ``append`` for stream-stream
+    joins / dedup, which emit rows as they materialize.
 
     ``no_data=False`` disables the engine's automatic no-data
     micro-batch for drains whose OUTPUT cannot depend on it — inner
@@ -2098,29 +2137,16 @@ def _drain_stream_to_table(
     # conf is restored — batch queries keep the session default).
     # Python-stateful ops (applyInPandasWithState) pass a higher count:
     # their per-group work runs in Python workers, so parallelism wins.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
+    _drain(
+        spark,
+        agg.writeStream.format("memory").queryName(name).outputMode(mode),
+        {
+            "spark.sql.shuffle.partitions": str(n_partitions),
+            "spark.sql.streaming.noDataMicroBatches.enabled": (
+                "true" if no_data else "false"
+            ),
+        },
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if no_data else "false",
-    )
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
 
 
 def st01_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3282,12 +3308,7 @@ def st08_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .load(f"{tmp}/b*")
     )
-    q = (
-        raw.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+    _drain(spark, raw.writeStream.foreachBatch(merge_batch))
     snap = spark.read.parquet(tgt)
     return snap.select(
         "user_id",
@@ -4559,17 +4580,15 @@ def st09_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def drain() -> None:
-        q = (
+        _drain(
+            spark,
             spark.readStream.schema(_EVENTS_TS_SCHEMA)
             .format("parquet")
             .option("maxFilesPerTrigger", "1")
             .load(f"{tmp}/b*")
             .writeStream.foreachBatch(append_partial)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        q.awaitTermination(600)
 
     drain()  # phase 1: sees b0, b1 only
     for p, s in zip(later, staged):
@@ -5564,16 +5583,14 @@ def p04_stream_progress_metrics(
         F.count(F.lit(1)).alias("n")
     )
     spark.catalog.dropTempView("p04_out")
-    q = (
+    q = _drain(
+        spark,
         counted.writeStream.format("memory")
         .queryName("p04_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination(600)
     # recentProgress is synchronous with batch completion: after
-    # awaitTermination every batch's numInputRows is present.
+    # the drain every batch's numInputRows is present.
     total_in = sum(
         int(p["numInputRows"]) for p in q.recentProgress
     )
@@ -6187,22 +6204,20 @@ def f16_multiline_json_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def k02_kinesis_checkpoint_resume(
-    spark: SparkSession, sf_dir: str
+def _kinesis_resume_drain(
+    spark: SparkSession, sf_dir: str, name: str, shards: tuple[int, ...]
 ) -> DataFrame:
-    """st09's exactly-once resume contract applied to the CUSTOM
-    Kinesis source (`sources/kinesis_source.py`): phase 1 ships a
-    third of the events through the PutRecords sink and drains it
-    through a checkpointed ``foreachBatch``; phase 2 ships a SECOND
-    third into the SAME dir-stream and restarts from the SAME
-    checkpoint — the source's per-shard sequence offsets must resume
-    past phase-1 records with zero re-emission (the partial-count
-    log would double-count otherwise and break the oracle hash).
-    This is the strongest evidence the Python Data Source's offset
-    API is implemented correctly, not just its happy-path read."""
-    import os
+    """Checkpoint-resume drains through the custom Kinesis source
+    (k02/k03): phase p ships the ``event_id % 3 == p`` third of the
+    events through the PutRecords sink into one ``dir:`` stream of
+    ``shards[p]`` shards, then drains it through a checkpointed
+    ``foreachBatch`` that appends per-type partial counts to a parquet
+    log.  Every phase resumes from the SAME checkpoint, so the
+    rolled-up log matches the batch oracle only if no record is read
+    twice or missed."""
     import shutil
     import tempfile
+    from functools import partial
 
     from kinesis_log_streamer_spark.sources.kinesis_source import (
         DirKinesisClient,
@@ -6213,28 +6228,14 @@ def k02_kinesis_checkpoint_resume(
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = os.path.join(tempfile.gettempdir(), "klss_k02_stream")
-    ckpt = os.path.join(tempfile.gettempdir(), "klss_k02_ckpt")
-    outp = os.path.join(tempfile.gettempdir(), "klss_k02_out")
+    ep = os.path.join(tempfile.gettempdir(), f"klss_{name}_stream")
+    ckpt = os.path.join(tempfile.gettempdir(), f"klss_{name}_ckpt")
+    outp = os.path.join(tempfile.gettempdir(), f"klss_{name}_out")
     for d in (ep, ckpt, outp):
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(outp)
 
     ev = _t(spark, sf_dir, "events")
-
-    def payload(mod3: int) -> DataFrame:
-        return ev.filter(F.col("event_id") % 3 == mod3).select(
-            F.to_json(
-                F.struct("event_id", "event_type", "value")
-            ).alias("data"),
-            F.concat(
-                F.lit("host-"), (F.col("user_id") % 8).cast("string")
-            ).alias("partitionKey"),
-        )
-
-    sink = KinesisSink(
-        "k02", client_factory=lambda: DirKinesisClient(ep)
-    )
     spark.dataSource.register(KinesisDataSource)
 
     def append_partial(batch_df: DataFrame, batch_id: int) -> None:
@@ -6254,22 +6255,28 @@ def k02_kinesis_checkpoint_resume(
             .parquet(outp)
         )
 
-    def drain() -> None:
-        q = (
+    for phase, n_shards in enumerate(shards):
+        payload = ev.filter(F.col("event_id") % 3 == phase).select(
+            F.to_json(
+                F.struct("event_id", "event_type", "value")
+            ).alias("data"),
+            F.concat(
+                F.lit("host-"), (F.col("user_id") % 8).cast("string")
+            ).alias("partitionKey"),
+        )
+        sink = KinesisSink(
+            name,
+            client_factory=partial(DirKinesisClient, ep, num_shards=n_shards),
+        )
+        sink.write_batch(payload.coalesce(2), epoch_id=phase)
+        _drain(
+            spark,
             spark.readStream.format("kinesis_py")
             .option("endpoint", f"dir:{ep}")
             .load()
             .writeStream.foreachBatch(append_partial)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        q.awaitTermination(600)
-
-    sink.write_batch(payload(0).coalesce(2), epoch_id=0)
-    drain()  # phase 1
-    sink.write_batch(payload(1).coalesce(2), epoch_id=1)
-    drain()  # phase 2: same checkpoint, only the new records
     return (
         spark.read.parquet(outp)
         .groupBy("event_type")
@@ -6279,6 +6286,22 @@ def k02_kinesis_checkpoint_resume(
         )
         .orderBy("event_type")
     )
+
+
+def k02_kinesis_checkpoint_resume(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """st09's exactly-once resume contract applied to the CUSTOM
+    Kinesis source (`sources/kinesis_source.py`): phase 1 ships a
+    third of the events through the PutRecords sink and drains it
+    through a checkpointed ``foreachBatch``; phase 2 ships a SECOND
+    third into the SAME dir-stream and restarts from the SAME
+    checkpoint — the source's per-shard sequence offsets must resume
+    past phase-1 records with zero re-emission (the partial-count
+    log would double-count otherwise and break the oracle hash).
+    This is the strongest evidence the Python Data Source's offset
+    API is implemented correctly, not just its happy-path read."""
+    return _kinesis_resume_drain(spark, sf_dir, "k02", shards=(2, 2))
 
 
 def p05_pipeline_reconciliation(
@@ -7397,18 +7420,16 @@ def st12_file_sink_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("event_id") % 2 == i),
             os.path.join(src, f"p{i}.parquet"),
         )
-    q = (
+    _drain(
+        spark,
         spark.readStream.schema(_EVENTS_TS_SCHEMA)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(src)
         .writeStream.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
     )
-    q.awaitTermination(600)
     assert os.path.isdir(os.path.join(out, "_spark_metadata"))
     back = spark.read.parquet(out)
     return (
@@ -8797,88 +8818,7 @@ def k03_kinesis_reshard_discovery(
     DISCOVER the new shards and read them from the start — k02's
     resume contract extended to a changing shard set, which is what
     production Kinesis consumers actually face."""
-    import os
-    import shutil
-    import tempfile
-
-    from kinesis_log_streamer_spark.sources.kinesis_source import (
-        DirKinesisClient,
-        KinesisDataSource,
-    )
-    from kinesis_log_streamer_spark.streaming.kinesis_sink import (
-        KinesisSink,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = os.path.join(tempfile.gettempdir(), "klss_k03_stream")
-    ckpt = os.path.join(tempfile.gettempdir(), "klss_k03_ckpt")
-    outp = os.path.join(tempfile.gettempdir(), "klss_k03_out")
-    for d in (ep, ckpt, outp):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(outp)
-
-    ev = _t(spark, sf_dir, "events")
-
-    def payload(mod3: int) -> DataFrame:
-        return ev.filter(F.col("event_id") % 3 == mod3).select(
-            F.to_json(
-                F.struct("event_id", "event_type", "value")
-            ).alias("data"),
-            F.concat(
-                F.lit("host-"), (F.col("user_id") % 8).cast("string")
-            ).alias("partitionKey"),
-        )
-
-    spark.dataSource.register(KinesisDataSource)
-
-    def append_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(
-                F.from_json(
-                    "data",
-                    "event_id long, event_type string, value double",
-                ).alias("r")
-            )
-            .groupBy(F.col("r.event_type").alias("event_type"))
-            .agg(
-                F.count(F.lit(1)).alias("n_partial"),
-                F.sum("r.value").alias("v_partial"),
-            )
-            .write.mode("append")
-            .parquet(outp)
-        )
-
-    def drain() -> None:
-        q = (
-            spark.readStream.format("kinesis_py")
-            .option("endpoint", f"dir:{ep}")
-            .load()
-            .writeStream.foreachBatch(append_partial)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-
-    sink2 = KinesisSink(
-        "k03", client_factory=lambda: DirKinesisClient(ep, num_shards=2)
-    )
-    sink4 = KinesisSink(
-        "k03", client_factory=lambda: DirKinesisClient(ep, num_shards=4)
-    )
-    sink2.write_batch(payload(0).coalesce(2), epoch_id=0)
-    drain()  # phase 1: two shards
-    sink4.write_batch(payload(1).coalesce(2), epoch_id=1)
-    drain()  # phase 2: reshard to four — new shards discovered
-    return (
-        spark.read.parquet(outp)
-        .groupBy("event_type")
-        .agg(
-            F.sum("n_partial").cast("long").alias("n_events"),
-            F.round(F.sum("v_partial"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _kinesis_resume_drain(spark, sf_dir, "k03", shards=(2, 4))
 
 
 def k04_at_most_once_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9737,6 +9677,81 @@ def st14_chained_window_rollup(
     )
 
 
+def _phased_running_totals(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    slice_mod: int,
+    key_mod: int,
+    phases: int,
+    op: Callable[[DataFrame], DataFrame],
+    confs: dict[str, str | None] | None = None,
+) -> DataFrame:
+    """Restart-surviving running totals (st15/st16/st19): the
+    ``event_id % slice_mod == 0`` events, keyed ``user_id % key_mod``
+    and tagged ``phase = event_id % phases``, are fed one phase at a
+    time — write phase p as one new file, then drain (:func:`_drain`,
+    holding ``confs``) the stateful ``op`` over the input directory
+    into one shared checkpoint, appending each batch's emissions.  The
+    union equals the per-(key, phase) PREFIX totals only if earlier
+    phases' state was restored from the state store.  The per-call
+    scratch directory is removed even when a drain raises."""
+    import shutil
+    import tempfile
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # Per-invocation dir: a fixed /tmp path let concurrent runs rmtree
+    # each other's checkpoints mid-drain.
+    base = tempfile.mkdtemp(prefix=f"klss_{name}_")
+    try:
+        indir = os.path.join(base, "in")
+        ckpt = os.path.join(base, "ckpt")
+        outp = os.path.join(base, "out")
+        os.makedirs(indir)
+        os.makedirs(outp)
+
+        ev = _t(spark, sf_dir, "events").filter(
+            F.col("event_id") % slice_mod == 0
+        )
+        payload = ev.select(
+            (F.col("user_id") % key_mod).cast("int").alias("key"),
+            (F.col("event_id") % phases).cast("int").alias("phase"),
+            "value",
+        )
+        for p in range(phases):
+            payload.filter(F.col("phase") == p).coalesce(1).write.mode(
+                "append"
+            ).parquet(indir)
+            stream = (
+                spark.readStream.schema("key int, phase int, value double")
+                .format("parquet")
+                .load(indir)
+            )
+            _drain(
+                spark,
+                op(stream)
+                .writeStream.foreachBatch(
+                    lambda df, _id: df.write.mode("append").parquet(outp)
+                )
+                .option("checkpointLocation", ckpt)
+                .outputMode("update"),
+                confs,
+            )
+        # Materialize before dropping the scratch dir: the driver
+        # re-collects the returned frame after this function exits.
+        rows = (
+            spark.read.parquet(outp)
+            .select("key", "phase", "running_n", "running_sum")
+            .orderBy("key", "phase")
+            .collect()
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        rows, "key int, phase int, running_n long, running_sum double"
+    ).orderBy("key", "phase")
+
+
 def st15_state_across_restarts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -9750,172 +9765,57 @@ def st15_state_across_restarts(
     The union of the three drains' emissions must therefore equal the
     per-(key, phase) PREFIX aggregates — which only happens if
     phase-0/1 state was durably restored into drains 1/2 from the
-    state store.  (The Spark 4 ``transformWithStateInPandas`` twin,
-    `streaming/stateful.py:running_totals_processor`, is implemented
-    but environment-gated: its state protocol needs google.protobuf,
-    absent in this container.)
+    state store (:func:`_phased_running_totals`).  Runs on the
+    session's shuffle-partition count.
 
     Scale: per-key state is two scalars in the state-store
     partitions; the same shape holds at any key cardinality."""
-    import os
-    import shutil
-    import tempfile
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Per-invocation dir (st16/i07 pattern, r6): a fixed /tmp path let
-    # concurrent runs rmtree each other's checkpoints mid-drain.
-    base = tempfile.mkdtemp(prefix="klss_st15_")
-    indir = os.path.join(base, "in")
-    ckpt = os.path.join(base, "ckpt")
-    outp = os.path.join(base, "out")
-    os.makedirs(indir)
-    os.makedirs(outp)
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 7 == 0)
-    payload = ev.select(
-        (F.col("user_id") % 50).cast("int").alias("key"),
-        (F.col("event_id") % 3).cast("int").alias("phase"),
-        "value",
-    )
-
     from kinesis_log_streamer_spark.streaming.stateful import (
         running_totals_with_state,
     )
 
-    def drain_phase(p: int) -> None:
-        payload.filter(F.col("phase") == p).coalesce(1).write.mode(
-            "append"
-        ).parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        out = running_totals_with_state(stream)
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-
-    for p in range(3):
-        drain_phase(p)
-
-    result = (
-        spark.read.parquet(outp)
-        .select("key", "phase", "running_n", "running_sum")
-        .orderBy("key", "phase")
+    return _phased_running_totals(
+        spark,
+        sf_dir,
+        "st15",
+        slice_mod=7,
+        key_mod=50,
+        phases=3,
+        op=running_totals_with_state,
     )
-    # Materialize before dropping the tempdir (the driver re-collects
-    # the returned frame after this function exits — st16's pattern).
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key int, phase int, running_n long, running_sum double"
-    ).orderBy("key", "phase")
 
 
 def st16_transform_with_state(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The Spark 4 ``transformWithStateInPandas`` operator (typed
-    ``ValueState`` handles — the arbitrary-state successor to
-    ``applyInPandasWithState``) under the SAME prefix-aggregate oracle
-    shape as st15: two sequential drains share one checkpoint, drain p
-    feeds exactly the phase-p slice, and per-key running (count, sum)
-    state must survive the restart for the union of emissions to equal
-    the per-(key, phase) prefix totals.
+    """st15's restart-surviving running totals on a second slice
+    (``event_id % 11 == 0``, key = ``user_id % 40``, two phases): the
+    same applyInPandasWithState operator
+    (`streaming/stateful.py:running_totals_with_state`) drained twice
+    into one checkpoint with 8 state-store tasks, checked against the
+    per-(key, phase) prefix totals (:func:`_phased_running_totals`).
+    The registry name is pinned; the Spark 4 transformWithState
+    variant it is named for needs google.protobuf on the workers and
+    is not carried.
 
-    ENVIRONMENT-GATED with a VERIFIED FALLBACK (VERDICT r05 item 6):
-    the transformWithState protocol needs ``google.protobuf`` on the
-    workers; where it is importable this query runs the real
-    `streaming/stateful.py:running_totals_transform_with_state`, and
-    where it is not (this container today) it runs the semantically
-    identical `running_totals_with_state` twin st15 already verifies —
-    so the oracle stays green either way and the moment the driver
-    image gains protobuf the new API gets a driver verdict with zero
-    repo changes.
-
-    Scale: per-key state is two scalars in RocksDB/state-store
+    Scale: per-key state is two scalars in the state-store
     partitions; shape holds at any key cardinality."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.streaming.stateful import (
-        running_totals_transform_with_state,
         running_totals_with_state,
-        transform_with_state_available,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = tempfile.mkdtemp(prefix="klss_st16_")
-    indir = os.path.join(base, "in")
-    ckpt = os.path.join(base, "ckpt")
-    outp = os.path.join(base, "out")
-    os.makedirs(indir)
-    os.makedirs(outp)
-
-    op = (
-        running_totals_transform_with_state
-        if transform_with_state_available()
-        else running_totals_with_state
+    return _phased_running_totals(
+        spark,
+        sf_dir,
+        "st16",
+        slice_mod=11,
+        key_mod=40,
+        phases=2,
+        op=running_totals_with_state,
+        # 8 state-store tasks instead of 32 for a 40-key state space;
+        # per-key prefix sums are partition-count-invariant.
+        confs={"spark.sql.shuffle.partitions": "8"},
     )
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 11 == 0)
-    payload = ev.select(
-        (F.col("user_id") % 40).cast("int").alias("key"),
-        (F.col("event_id") % 2).cast("int").alias("phase"),
-        "value",
-    )
-
-    def drain_phase(p: int) -> None:
-        payload.filter(F.col("phase") == p).coalesce(1).write.mode(
-            "append"
-        ).parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        q = (
-            op(stream)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-
-    # 8 state-store tasks instead of 32 for a 30-key state space —
-    # same per-batch-overhead cut as _drain_stream_to_table / st18
-    # (the prefix totals are per-key sums, partition-count-invariant).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for p in range(2):
-            drain_phase(p)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    result = (
-        spark.read.parquet(outp)
-        .select("key", "phase", "running_n", "running_sum")
-        .orderBy("key", "phase")
-    )
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key int, phase int, running_n long, running_sum double"
-    ).orderBy("key", "phase")
 
 
 def q121_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11256,27 +11156,20 @@ def f24_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark 4 STATE STORE READER (`spark.read.format(
-    "statestore")`) — the operational debugging surface for every
-    stateful query shipped in the st-family (VERDICT r06 #7): drain a
-    checkpointed streaming count over events, then read the
-    checkpoint's state rows BACK from disk and reconcile them against
-    the batch aggregate.  A state row the engine persisted wrong, or
-    a key lost by the store, breaks the oracle hash — this is the
-    "is my state what I think it is" query every streaming user
-    eventually runs.
-
-    Output comes FROM THE STATE ROWS (key.event_type, value.count),
-    not the memory sink, joined to the batch aggregate for the
-    `state_ok` gate.  Env gate: if this Spark build lacks the
-    statestore format, the drained sink rows stand in (documented
-    fallback, st16 pattern) — the reconciliation contract is
-    identical.  Per-invocation mkdtemp checkpoint (st15 precedent).
-
-    Scale: state-reader scans are per-partition parallel reads of the
-    HDFS state store; the reconcile is a 5-row broadcast join."""
-    import os
+def _statestore_reconcile(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    keep: Column | None,
+    drain: Callable[[Callable[[], DataStreamWriter], str], None],
+) -> DataFrame:
+    """st17/st18: a checkpointed streaming count per event type over
+    the events (filtered by the ``keep`` column when given) is drained
+    by ``drain(make_writer, ckpt)``; the checkpoint's state rows are
+    then read BACK through ``spark.read.format("statestore")`` (the
+    state data source every Spark >= 3.5 ships) and joined to the
+    batch count — ``state_ok`` is 1 where the persisted state agrees.
+    The per-call checkpoint is removed even when the drain raises."""
     import shutil
     import tempfile
 
@@ -11285,30 +11178,24 @@ def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = read_events_stream(spark, sf_dir)
+    batch = _t(spark, sf_dir, "events")
+    if keep is not None:
+        ev = ev.filter(keep)
+        batch = batch.filter(keep)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="klss-st17-ckpt-")
-    name = "st17_out"
-    spark.catalog.dropTempView(name)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
+    ckpt = tempfile.mkdtemp(prefix=f"klss-{name}-ckpt-")
+    spark.catalog.dropTempView(f"{name}_out")
+
+    def make_writer():
+        return (
             agg.writeStream.format("memory")
-            .queryName(name)
+            .queryName(f"{name}_out")
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        # ADVICE r7 low #3: a False return means TIMEOUT with the query
-        # still running — reading + rmtree-ing the checkpoint under it
-        # races the store; stop and fail loudly instead.
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("st17: availableNow drain timed out (600s)")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
     try:
+        drain(make_writer, ckpt)
         state = (
             spark.read.format("statestore")
             .load(ckpt)
@@ -11318,25 +11205,12 @@ def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         state_rows = [(r.event_type, r.state_n) for r in state.collect()]
-    except AnalysisException as exc:
-        # Fallback ONLY when the build lacks the statestore format
-        # (ADVICE r7 low #3: a bare except silently downgraded real
-        # state-read failures — e.g. a value.count field drift — to
-        # the memory sink where state_ok is trivially 1).
-        msg = str(exc).upper()
-        if not (
-            "DATA_SOURCE_NOT_FOUND" in msg or "FAILED TO FIND" in msg
-        ):
-            raise
-        state_rows = [
-            (r.event_type, r.n) for r in spark.table(name).collect()
-        ]
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     state_df = spark.createDataFrame(
         state_rows, "event_type string, state_n long"
     )
-    batch = _t(spark, sf_dir, "events").groupBy("event_type").agg(
+    batch = batch.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
     return (
@@ -11353,6 +11227,35 @@ def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("state_ok"),
         )
         .orderBy("event_type")
+    )
+
+
+def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark 4 STATE STORE READER (`spark.read.format(
+    "statestore")`) — the operational debugging surface for every
+    stateful query shipped in the st-family (VERDICT r06 #7): drain a
+    checkpointed streaming count over events, then read the
+    checkpoint's state rows BACK from disk and reconcile them against
+    the batch aggregate (:func:`_statestore_reconcile`).  A state row
+    the engine persisted wrong, or a key lost by the store, breaks the
+    oracle hash — this is the "is my state what I think it is" query
+    every streaming user eventually runs.
+
+    Output comes FROM THE STATE ROWS (key.event_type, value.count),
+    not the memory sink, joined to the batch aggregate for the
+    `state_ok` gate.  Per-invocation mkdtemp checkpoint (st15
+    precedent).
+
+    Scale: state-reader scans are per-partition parallel reads of the
+    HDFS state store; the reconcile is a 5-row broadcast join."""
+    return _statestore_reconcile(
+        spark,
+        sf_dir,
+        "st17",
+        keep=None,
+        drain=lambda make_writer, _ckpt: _drain(
+            spark, make_writer(), {"spark.sql.shuffle.partitions": "8"}
+        ),
     )
 
 
@@ -11632,68 +11535,38 @@ def st18_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
     count over events with ``spark.sql.streaming.stateStore
     .providerClass = RocksDBStateStoreProvider``, read the RocksDB
     checkpoint's state rows BACK through ``spark.read.format(
-    "statestore")``, and reconcile them against the batch aggregate.
+    "statestore")``, and reconcile them against the batch aggregate
+    (:func:`_statestore_reconcile`).
     RocksDB is the provider every large-state production deployment
     runs (bounded executor heap, incremental checkpoints) — a state
     row it persists wrong breaks this hash.
 
     Slice differs from st17 (event_id % 3 == 0 subset) so
-    the two queries can't mask each other's fixtures.  Env gates, both
+    the two queries can't mask each other's fixtures.  Env gate,
     loud-by-default: a build without RocksDB falls back to the default
-    provider drain (same reconciliation contract, st16 pattern, gated
-    on the specific CLASS_NOT_FOUND/instantiate error); a build
-    without the statestore reader falls back to the memory sink
-    (st17's DATA_SOURCE_NOT_FOUND gate).  Restores the provider conf
-    in a finally so later queries see the session default.
+    provider drain (same reconciliation contract, gated on the
+    specific CLASS_NOT_FOUND/instantiate error).  The provider conf is
+    held only for the drain, so later queries see the session default.
 
     Scale: RocksDB state scans are per-partition parallel reads; the
     reconcile is a bounded broadcast join (distinct event types).
     Reference parity: the reference has no stateful surface (it is an
     ingest pipe, linestreamer.go); this is analytics-layer breadth."""
-    import os
     import shutil
-    import tempfile
 
-    from kinesis_log_streamer_spark.streaming.pipeline import (
-        read_events_stream,
-    )
-
-    ev = read_events_stream(spark, sf_dir).filter(
-        F.col("event_id") % 3 == 0
-    )
-    agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="klss-st18-ckpt-")
-    name = "st18_out"
-    spark.catalog.dropTempView(name)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev_provider = spark.conf.get(provider_key)
-    except Exception:
-        prev_provider = None
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
 
-    def _drain() -> None:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("st18: availableNow drain timed out (600s)")
-
-    try:
+    def drain(make_writer, ckpt: str) -> None:
         try:
-            _drain()
+            _drain(
+                spark,
+                make_writer(),
+                {
+                    "spark.sql.shuffle.partitions": "8",
+                    provider_key: "org.apache.spark.sql.execution."
+                    "streaming.state.RocksDBStateStoreProvider",
+                },
+            )
         except Exception as exc:  # noqa: BLE001
             # Env gate: only a missing/unloadable RocksDB provider
             # falls back to the default provider — anything else
@@ -11708,159 +11581,56 @@ def st18_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ):
                 raise
-            spark.conf.unset(provider_key)
             shutil.rmtree(ckpt, ignore_errors=True)
             os.makedirs(ckpt, exist_ok=True)
-            _drain()
-        try:
-            state = (
-                spark.read.format("statestore")
-                .load(ckpt)
-                .select(
-                    F.col("key.event_type").alias("event_type"),
-                    F.col("value.count").alias("state_n"),
-                )
+            _drain(
+                spark,
+                make_writer(),
+                {"spark.sql.shuffle.partitions": "8", provider_key: None},
             )
-            state_rows = [(r.event_type, r.state_n) for r in state.collect()]
-        except AnalysisException as exc:
-            msg = str(exc).upper()
-            if not (
-                "DATA_SOURCE_NOT_FOUND" in msg or "FAILED TO FIND" in msg
-            ):
-                raise
-            state_rows = [
-                (r.event_type, r.n) for r in spark.table(name).collect()
-            ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is not None:
-            spark.conf.set(provider_key, prev_provider)
-        else:
-            spark.conf.unset(provider_key)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    state_df = spark.createDataFrame(state_rows, "event_type string, state_n long")
-    batch = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 3 == 0)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return (
-        batch.join(F.broadcast(state_df), "event_type", "left")
-        .select(
-            "event_type",
-            "n_events",
-            # coalesce: a batch key absent from the state rows must read
-            # state_ok=0 (the documented bad marker), not NULL — the left
-            # join would otherwise null the comparison (ADVICE r8 low #3).
-            F.coalesce(
-                (F.col("state_n") == F.col("n_events")).cast("int"),
-                F.lit(0),
-            ).alias("state_ok"),
-        )
-        .orderBy("event_type")
+
+    return _statestore_reconcile(
+        spark, sf_dir, "st18", keep=F.col("event_id") % 3 == 0, drain=drain
     )
 
 
 def st19_state_ttl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key running totals on TTL-configured state (VERDICT r7 #6
-    "add state TTL to one transformWithState query"): st16's
-    two-drain prefix-aggregate shape, but every state handle carries a
-    1-hour TTL — the hygiene knob that keeps an unbounded key space
-    (IPs, session ids) from growing a 100 TB state store forever.
+    """Per-key running totals on TTL-configured state: st16's
+    two-drain prefix-aggregate shape (:func:`_phased_running_totals`),
+    but every key's state carries a 1-hour TTL — the hygiene knob that
+    keeps an unbounded key space (IPs, session ids) from growing a
+    100 TB state store forever.  The operator
+    (`streaming/stateful.py:running_totals_with_state_ttl`,
+    applyInPandasWithState) stores the last-update time beside the
+    totals, and a key not refreshed within the TTL reads as absent.
     Within the drains nothing expires (TTL >> drain wall-clock), so
     the output is the DETERMINISTIC prefix-total table the oracle
     states; the EXPIRY behavior itself is wall-clock-dependent and is
     pinned by `tests/test_stateful.py::TestStateTTL` (a sleep past a
-    1 s TTL resets the totals), not by an oracle hash.
-
-    Env gate (st16 pattern): with protobuf present this runs the real
-    ``transformWithStateInPandas`` TTLConfig path
-    (`stateful.running_totals_transform_with_state_ttl`); without it
-    (this container) the self-managed-timestamp twin
-    (`running_totals_with_state_ttl`) with identical TTL-on-read
-    semantics.  Slice: event_id % 13 == 0, key = user_id % 30,
-    phase = event_id % 2.
+    1 s TTL resets the totals), not by an oracle hash.  Slice:
+    event_id % 13 == 0, key = user_id % 30, phase = event_id % 2.
 
     Scale: per-key state is three scalars; TTL eviction is the
     mechanism that BOUNDS total state at high key cardinality."""
-    import os
-    import shutil
-    import tempfile
+    from functools import partial
 
     from kinesis_log_streamer_spark.streaming.stateful import (
-        running_totals_transform_with_state_ttl,
         running_totals_with_state_ttl,
-        transform_with_state_available,
     )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = tempfile.mkdtemp(prefix="klss_st19_")
-    indir = os.path.join(base, "in")
-    ckpt = os.path.join(base, "ckpt")
-    outp = os.path.join(base, "out")
-    os.makedirs(indir)
-    os.makedirs(outp)
 
     ttl_ms = 3_600_000  # 1 h: plumbing exercised, nothing expires in-run
-    op = (
-        running_totals_transform_with_state_ttl
-        if transform_with_state_available()
-        else running_totals_with_state_ttl
+    return _phased_running_totals(
+        spark,
+        sf_dir,
+        "st19",
+        slice_mod=13,
+        key_mod=30,
+        phases=2,
+        op=partial(running_totals_with_state_ttl, ttl_ms=ttl_ms),
+        # st16's 8 state-store tasks: at 32, st19 was the most
+        # expensive headline query (9.4 s median, measured round 9).
+        confs={"spark.sql.shuffle.partitions": "8"},
     )
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 13 == 0)
-    payload = ev.select(
-        (F.col("user_id") % 30).cast("int").alias("key"),
-        (F.col("event_id") % 2).cast("int").alias("phase"),
-        "value",
-    )
-
-    def drain_phase(p: int) -> None:
-        payload.filter(F.col("phase") == p).coalesce(1).write.mode(
-            "append"
-        ).parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        q = (
-            op(stream, ttl_ms)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("st19: availableNow drain timed out (600s)")
-
-    # 8 state-store tasks instead of 32 for a 30-key state space —
-    # st16/st18's per-batch-overhead cut; per-key prefix sums are
-    # partition-count-invariant.  Measured round 9: st19 was the most
-    # expensive headline query (9.4s median) at 32 state partitions.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for p in range(2):
-            drain_phase(p)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    result = (
-        spark.read.parquet(outp)
-        .select("key", "phase", "running_n", "running_sum")
-        .orderBy("key", "phase")
-    )
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key int, phase int, running_n long, running_sum double"
-    ).orderBy("key", "phase")
 
 
 def d21_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:

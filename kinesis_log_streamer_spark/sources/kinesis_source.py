@@ -27,10 +27,7 @@ driver-side poller:
     ``client`` option: default ``boto3`` (import-gated; verified
     against an in-process moto server, tests/test_moto_aws.py), or
     ``module.path:factory`` resolving to
-    ``factory(options) -> client`` — tests pass
-    ``kinesis_log_streamer_spark.sources.fake_aws:client_for``, a
-    boto3-shaped fake over the same shard files, so the whole aws
-    transport is exercised end-to-end without AWS.
+    ``factory(options) -> client``.
 
 AWS-mode batch semantics (**timestamp-fence offsets**, round 14 —
 replacing the driver-download probe VERDICT r13 flagged as the one
@@ -190,14 +187,10 @@ class _AwsShardSlice(InputPartition):
 
 
 def _arrival_ts(rec: dict) -> float:
-    """Epoch seconds from a GetRecords record — boto3 hands back an
-    aware datetime, fakes may hand back the float directly, legacy
-    fake lines without a stamp read as 0.0 (always inside the first
-    TRIM_HORIZON batch)."""
-    ts = rec.get("ApproximateArrivalTimestamp", 0.0)
-    if hasattr(ts, "timestamp"):
-        return ts.timestamp()
-    return float(ts)
+    """Epoch seconds of a GetRecords record's
+    ``ApproximateArrivalTimestamp`` (boto3 hands back an aware
+    datetime)."""
+    return rec["ApproximateArrivalTimestamp"].timestamp()
 
 
 class AwsKinesisStreamReader(DataSourceStreamReader):
@@ -682,13 +675,7 @@ class DirKinesisClient:
         return f"{h % self._num_shards:03d}"
 
     def put_records(self, StreamName: str, Records: list[dict]) -> dict:  # noqa: N803
-        import time as _time  # noqa: PLC0415
-
         os.makedirs(self._dir, exist_ok=True)
-        # Arrival stamp, the service's ApproximateArrivalTimestamp:
-        # assigned at ingest, immutable thereafter — what the aws-mode
-        # fence reader ranges over (dir:-mode readers ignore it).
-        now = _time.time()
         groups: dict[str, list[str]] = {}
         for rec in Records:
             data = rec["Data"]
@@ -696,7 +683,7 @@ class DirKinesisClient:
                 data = data.decode("utf-8")
             key = rec["PartitionKey"]
             groups.setdefault(self._shard_for(key), []).append(
-                json.dumps({"data": data, "partitionKey": key, "ts": now})
+                json.dumps({"data": data, "partitionKey": key})
             )
         for shard, lines in groups.items():
             path = os.path.join(self._dir, f"shard-{shard}.jsonl")
@@ -756,19 +743,12 @@ class ThrottlingDirKinesisClient(DirKinesisClient):
 
 
 def write_fake_shard(endpoint_dir: str, shard_id: str, records: list[tuple[str, str]]) -> None:
-    """Append (data, partitionKey) records to a fake shard file — the
-    test-side producer matching the reference's sink contract.  Each
-    line carries an arrival stamp (``ts``) so the aws-mode fence
-    reader's AT_TIMESTAMP ranging works against the fake exactly as
-    against the service."""
-    import time as _time  # noqa: PLC0415
-
+    """Append (data, partitionKey) records to a ``dir:`` shard file —
+    the test-side producer matching the reference's sink contract."""
     os.makedirs(endpoint_dir, exist_ok=True)
-    now = _time.time()
     path = os.path.join(endpoint_dir, f"shard-{shard_id}.jsonl")
     with open(path, "a", encoding="utf-8") as fh:
         for data, key in records:
             fh.write(
-                json.dumps({"data": data, "partitionKey": key, "ts": now})
-                + "\n"
+                json.dumps({"data": data, "partitionKey": key}) + "\n"
             )

@@ -225,11 +225,15 @@ def drain_and_stop(
     window is stretched to cover at least two trigger intervals so
     the source is guaranteed a listing pass over the final landed
     files before the query stops.
+
+    Raises ``TimeoutError`` (after stopping the query) when
+    ``timeout_s`` passes before the drain went idle.
     """
     if trigger_interval_s:
         idle_span_s = max(idle_span_s, 2.5 * trigger_interval_s)
     deadline = time.monotonic() + timeout_s if timeout_s else None
     idle_since: float | None = None
+    timed_out = False
     while True:
         if not query.isActive:
             # The query died (sink failure, bad checkpoint) or was
@@ -239,6 +243,7 @@ def drain_and_stop(
             break
         now = time.monotonic()
         if deadline and now > deadline:
+            timed_out = True
             break
         if spooler.done.is_set() and query.lastProgress is not None:
             if query.status["isDataAvailable"]:
@@ -253,4 +258,6 @@ def drain_and_stop(
     query.awaitTermination()
     if exc is not None:
         raise exc
+    if timed_out:
+        raise TimeoutError(f"streaming drain not idle after {timeout_s}s")
 

@@ -1,15 +1,18 @@
-"""Two decisions the engine makes in exactly one place each:
+"""Three decisions the engine makes in exactly one place each:
 
 * the REGISTRY order, which decides the external driver's 50-entry
   verification window, is one literal pinned here by hash;
 * every per-application driver-side artifact lives in the session
-  memo (``session.memo``), which ``session.clear_memo()`` empties.
+  memo (``session.memo``), which ``session.clear_memo()`` empties;
+* every bounded streaming drain in the registry runs through
+  ``queries._drain`` (trigger, timeout and session-conf policy).
 """
 
 from __future__ import annotations
 
 import hashlib
 import inspect
+import pathlib
 from types import SimpleNamespace
 
 import pytest
@@ -45,6 +48,108 @@ class TestRegistryOrder:
 
     def test_entries_are_their_functions(self):
         assert all(f is getattr(Q, n) for n, f in Q.REGISTRY.items())
+
+
+class _Conf:
+    """Dict-backed stand-in for ``spark.conf`` (unset = absent key)."""
+
+    def __init__(self, values):
+        self.values = dict(values)
+
+    def get(self, key, default):
+        return self.values.get(key, default)
+
+    def set(self, key, value):
+        self.values[key] = value
+
+    def unset(self, key):
+        self.values.pop(key, None)
+
+
+class _Query:
+    def __init__(self, finishes=True, error=None):
+        self.finishes = finishes
+        self.error = error
+        self.stopped = False
+        self.name = "stub_q"
+        self.id = "stub-id"
+
+    def awaitTermination(self, timeout):  # noqa: N802
+        if self.error is not None:
+            raise self.error
+        return self.finishes
+
+    def stop(self):
+        self.stopped = True
+
+
+class _Writer:
+    def __init__(self, query, on_start=lambda: None):
+        self.query = query
+        self.on_start = on_start
+        self.triggers = []
+
+    def trigger(self, **kw):
+        self.triggers.append(kw)
+        return self
+
+    def start(self):
+        self.on_start()
+        return self.query
+
+
+class TestOneDrainPolicy:
+    def _spark(self, values):
+        return SimpleNamespace(conf=_Conf(values))
+
+    def test_timeout_stops_query_and_raises(self):
+        q = _Query(finishes=False)
+        with pytest.raises(RuntimeError, match="timed out"):
+            Q._drain(self._spark({}), _Writer(q))
+        assert q.stopped
+
+    def test_returns_finished_query_with_available_now(self):
+        q = _Query()
+        w = _Writer(q)
+        assert Q._drain(self._spark({}), w) is q
+        assert w.triggers == [{"availableNow": True}]
+
+    @pytest.mark.parametrize("error", [None, ValueError("query failed")])
+    def test_confs_restored_after_drain(self, error):
+        spark = self._spark({"a": "1", "c": "3"})
+        seen = {}
+        w = _Writer(
+            _Query(error=error),
+            on_start=lambda: seen.update(spark.conf.values),
+        )
+        confs = {"a": "8", "b": "x", "c": None}
+        if error is None:
+            Q._drain(spark, w, confs)
+        else:
+            with pytest.raises(ValueError):
+                Q._drain(spark, w, confs)
+        # held during the drain (None = unset) ...
+        assert seen == {"a": "8", "b": "x"}
+        # ... and afterwards: prior values back, the unset key unset
+        assert spark.conf.values == {"a": "1", "c": "3"}
+
+    def test_one_drain_site_in_the_registry(self):
+        src = inspect.getsource(Q)
+        drain_src = inspect.getsource(Q._drain)
+        for needle in (".trigger(availableNow=True)", "awaitTermination("):
+            assert src.count(needle) == 1, needle
+            assert needle in drain_src, needle
+
+    def test_no_removed_twins_in_the_package(self):
+        pkg = pathlib.Path(Q.__file__).resolve().parents[1]
+        hits = [
+            (str(f.relative_to(pkg)), needle)
+            for f in sorted(pkg.rglob("*.py"))
+            for needle in ("transformWithStateInPandas", "fake_aws")
+            if needle in f.read_text(encoding="utf-8")
+        ]
+        assert hits == []
+        assert not (pkg / "sources" / "fake_aws.py").exists()
 
 
 def _app(app_id: str):

@@ -4,9 +4,9 @@ is pinned here instead — a key whose state is not refreshed within
 ``ttl_ms`` restarts its running totals from zero on its next batch,
 while a long-TTL control keeps accumulating across the same restart.
 
-The protobuf-free twin (`running_totals_with_state_ttl`) runs in this
-image; the real ``transformWithStateInPandas`` TTLConfig path is
-protobuf-gated the same way st16 gates it.
+The operator under test is `streaming/stateful.py:
+running_totals_with_state_ttl` (applyInPandasWithState with the
+last-update time kept beside the totals), the one st19 runs.
 """
 
 from __future__ import annotations
@@ -14,13 +14,10 @@ from __future__ import annotations
 import os
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.streaming.stateful import (
-    running_totals_transform_with_state_ttl,
     running_totals_with_state_ttl,
-    transform_with_state_available,
 )
 
 
@@ -82,18 +79,3 @@ class TestStateTTL:
             spark, tmp_path, running_totals_with_state_ttl, 3_600_000, 0.0
         )
         assert got[1] == (3, 15.0), f"state lost across restart: {got}"
-
-    @pytest.mark.skipif(
-        not transform_with_state_available(),
-        reason="transformWithState needs google.protobuf on workers "
-        "(absent in this image; twin covered above, st16 pattern)",
-    )
-    def test_engine_ttl_expires(self, spark, tmp_path):
-        got = self._run(
-            spark,
-            tmp_path,
-            running_totals_transform_with_state_ttl,
-            1000,
-            2.5,
-        )
-        assert got[1] == (1, 10.0), f"engine TTL leaked state: {got}"

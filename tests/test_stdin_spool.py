@@ -224,6 +224,38 @@ def test_spooler_crash_sets_done_and_error(tmp_path):
     assert isinstance(sp.error, ValueError)
 
 
+def test_drain_and_stop_raises_at_its_deadline():
+    """A query that never goes idle must not return as if drained: at
+    ``timeout_s`` the query is stopped and ``TimeoutError`` raised (a
+    quiet return would hand back a partial table)."""
+    import threading
+    from types import SimpleNamespace
+
+    class BusyQuery:
+        isActive = True
+        lastProgress = {"batchId": 0}
+        status = {"isDataAvailable": True}
+        stopped = False
+
+        def exception(self):
+            return None
+
+        def stop(self):
+            self.stopped = True
+
+        def awaitTermination(self, timeout=None):
+            return True
+
+    q = BusyQuery()
+    spooler = SimpleNamespace(done=threading.Event())
+    spooler.done.set()
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError):
+        drain_and_stop(q, spooler, poll_s=0.05, timeout_s=0.3)
+    assert q.stopped
+    assert time.monotonic() - t0 < 10
+
+
 def test_cli_streaming_json_garbage_exits_1(spark, capsys):
     from kinesis_log_streamer_spark import cli
 

@@ -561,186 +561,3 @@ class TestEventTimeSessionizer:
             (1, base + dt.timedelta(minutes=55), 1, "c", "c"),
             (2, base + dt.timedelta(minutes=5), 1, "x", "x"),
         ]
-
-
-class TestAwsKinesisTransport:
-    """The aws endpoint's ListShards/GetShardIterator/GetRecords path,
-    driven end-to-end through the boto3-shaped fake (fake_aws.py)."""
-
-    def _write(self, ep):
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            write_fake_shard,
-        )
-
-        write_fake_shard(ep, "000", [("a1", "h1"), ("a2", "h1")])
-        write_fake_shard(ep, "001", [("b1", "h2")])
-
-    def test_fake_client_call_surface(self, tmp_path):
-        from kinesis_log_streamer_spark.sources.fake_aws import (
-            FakeKinesisReadClient,
-        )
-
-        ep = str(tmp_path / "stream")
-        self._write(ep)
-        c = FakeKinesisReadClient(ep)
-        assert [s["ShardId"] for s in c.list_shards(StreamName="s")["Shards"]] == [
-            "000",
-            "001",
-        ]
-        it = c.get_shard_iterator(
-            StreamName="s", ShardId="000", ShardIteratorType="TRIM_HORIZON"
-        )["ShardIterator"]
-        resp = c.get_records(ShardIterator=it, Limit=1)
-        assert resp["Records"][0]["Data"] == b"a1"
-        assert resp["Records"][0]["SequenceNumber"] == "0"
-        resp2 = c.get_records(ShardIterator=resp["NextShardIterator"])
-        assert [r["Data"] for r in resp2["Records"]] == [b"a2"]
-        it3 = c.get_shard_iterator(
-            StreamName="s",
-            ShardId="000",
-            ShardIteratorType="AFTER_SEQUENCE_NUMBER",
-            StartingSequenceNumber="0",
-        )["ShardIterator"]
-        assert c.get_records(ShardIterator=it3)["Records"][0]["Data"] == b"a2"
-
-    def _aws_stream(self, spark, ep):
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            KinesisDataSource,
-        )
-
-        spark.dataSource.register(KinesisDataSource)
-        return (
-            spark.readStream.format("kinesis_py")
-            .option("endpoint", "aws")
-            .option("stream", "test-stream")
-            .option(
-                "client", "kinesis_log_streamer_spark.sources.fake_aws:client_for"
-            )
-            .option("fake_dir", ep)
-            .option("fencelagms", "0")  # single-process clock: no skew
-            .load()
-        )
-
-    def test_aws_endpoint_reads_all_shards(self, spark, tmp_path):
-        ep = str(tmp_path / "stream")
-        self._write(ep)
-        q = (
-            self._aws_stream(spark, ep)
-            .writeStream.format("memory")
-            .queryName("kin_aws")
-            .option("checkpointLocation", str(tmp_path / "ck_aws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql(
-            "SELECT * FROM kin_aws ORDER BY shardId, CAST(sequenceNumber AS INT)"
-        ).collect()
-        assert [
-            (r.data, r.partitionKey, r.shardId, r.sequenceNumber) for r in rows
-        ] == [
-            ("a1", "h1", "000", "0"),
-            ("a2", "h1", "000", "1"),
-            ("b1", "h2", "001", "0"),
-        ]
-
-    def test_aws_incremental_offsets_no_reread(self, spark, tmp_path):
-        import time
-
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            write_fake_shard,
-        )
-
-        ep = str(tmp_path / "stream2")
-        self._write(ep)
-        q = (
-            self._aws_stream(spark, ep)
-            .writeStream.format("memory")
-            .queryName("kin_aws_inc")
-            .option("checkpointLocation", str(tmp_path / "ck_aws2"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                if spark.sql("SELECT count(*) c FROM kin_aws_inc").collect()[0].c >= 3:
-                    break
-                time.sleep(1)
-            # new records on one shard: the next micro-batch's probe must
-            # advance that shard's sequence offset and read ONLY them.
-            write_fake_shard(ep, "001", [("b2", "h2")])
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                if spark.sql("SELECT count(*) c FROM kin_aws_inc").collect()[0].c >= 4:
-                    break
-                time.sleep(1)
-        finally:
-            q.stop()
-        rows = spark.sql(
-            "SELECT data FROM kin_aws_inc "
-            "ORDER BY shardId, CAST(sequenceNumber AS INT)"
-        ).collect()
-        # exactly-once per record: no rereads, appended records picked up
-        assert [r.data for r in rows] == ["a1", "a2", "b1", "b2"]
-
-
-class TestTransformWithState:
-    """Spark 4 transformWithStateInPandas (VERDICT r05 item 6): the
-    real API is exercised where google.protobuf exists; everywhere
-    else the availability gate must be False and the registered st16
-    query must fall back to the verified applyInPandasWithState twin
-    (covered by its DuckDB oracle in selfcheck)."""
-
-    def test_availability_gate_matches_import(self):
-        from kinesis_log_streamer_spark.streaming.stateful import (
-            transform_with_state_available,
-        )
-
-        try:
-            import google.protobuf  # noqa: F401
-
-            has = True
-        except ImportError:
-            has = False
-        assert transform_with_state_available() is has
-
-    def test_running_totals_via_transform_with_state(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from kinesis_log_streamer_spark.streaming.stateful import (
-            running_totals_transform_with_state,
-            transform_with_state_available,
-        )
-
-        if not transform_with_state_available():
-            _pytest.skip("google.protobuf absent: transformWithState "
-                         "state protocol cannot run in this env")
-        indir = str(tmp_path / "in")
-        outp = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        spark.createDataFrame(
-            [(1, 0, 2.0), (1, 0, 3.0), (2, 0, 5.0)],
-            "key int, phase int, value double",
-        ).coalesce(1).write.parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        q = (
-            running_totals_transform_with_state(stream)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        rows = {
-            (r.key, r.running_n, r.running_sum)
-            for r in spark.read.parquet(outp).collect()
-        }
-        assert rows == {(1, 2, 5.0), (2, 1, 5.0)}
